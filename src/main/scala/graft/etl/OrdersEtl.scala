@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Drop-in equivalent of the reference's `OrdersEtl` class
   * (reference `etl/orders_etl.py:10-198`): same constructor shape, same
@@ -12,8 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - the sink targets the warehouse abstraction of [[Sink]] (Parquet
   *     overwrite ≡ BigQuery `if_exists="replace"`; swap in the
   *     spark-bigquery-connector on a connected cluster);
-  *   - `findSimilarProducts` evaluates the score as a broadcast column
-  *     expression and collects only the (id, score) pairs.
+  *   - `findSimilarProducts` reads the products once per instance, like the
+  *     reference's in-memory `products_df`: the first lookup pins them, and
+  *     every lookup is then one job that collects only the target and
+  *     candidate rows, scored on the driver.
   */
 class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
                 warehouseRoot: String, tableName: String) {
@@ -25,6 +28,19 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
   lazy val processedProducts: DataFrame = Pipeline.processedProducts(spark, productsCsv)
   lazy val output: DataFrame = Pipeline.joinFrames(processedOrders, processedProducts)
 
+  /** [[processedProducts]] as the lookups see it: the scoring columns,
+    * pinned by the first lookup. A `localCheckpoint`, not `cache()`: the
+    * CacheManager matches by plan, so a cached frame would also serve the
+    * next instance's lookups and `write()`. The load never reads this
+    * frame; it keeps the unpinned plan, whose statistics drive the
+    * broadcast join. The pinned blocks are executor-local: after losing an
+    * executor that held one, lookups on this instance fail, and a new
+    * instance reads the products again.
+    */
+  private lazy val lookupProducts: DataFrame =
+    processedProducts.select(Schemas.productsReadCols.map(col): _*)
+      .localCheckpoint()
+
   /** Reference `process()` — returns the denormalized table. */
   def process(): DataFrame = output
 
@@ -33,16 +49,20 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
 
   /** Reference `find_similar_products`: `Map(candidate_id -> score)`.
     * Throws if the target id is absent, matching the reference's
-    * `IndexError` contract (reference `etl/orders_etl.py:105`).
+    * `IndexError` contract (reference `etl/orders_etl.py:105`). Candidate
+    * ids absent from the products are omitted. One job after the first
+    * call; driver memory is bounded by the request, not by the table.
     */
   def findSimilarProducts(targetId: Long,
                           candidateIds: Seq[Long]): Map[Long, Double] = {
-    require(
-      !processedProducts.filter(processedProducts("product_id") === targetId).isEmpty,
-      s"target product $targetId not found")
-    Similarity.findSimilar(processedProducts, targetId, candidateIds)
+    val id = col("product_id")
+    val rows = lookupProducts
+      .filter(id === targetId || id.isin(candidateIds: _*))
       .collect()
-      .map(r => r.getLong(0) -> r.getDouble(1))
-      .toMap
+    val target = rows.find(_.getLong(0) == targetId)
+    require(target.isDefined, s"target product $targetId not found")
+    val wanted = candidateIds.toSet
+    Similarity.scoreRows(spark, lookupProducts.schema,
+      rows.filter(r => wanted(r.getLong(0))).toSeq, target.get)
   }
 }

@@ -1,7 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** The product-similarity scorer (reference `etl/orders_etl.py:94-147`).
   *
@@ -15,9 +18,12 @@ import org.apache.spark.sql.functions._
   *   - round half-even to 5 decimals (Python `round` → Spark `bround`).
   *
   * Execution shape: the target is one row — broadcast it and evaluate the
-  * score as a pure column expression over the filtered candidates. One
-  * narrow stage, no shuffle, fully codegen'd; at 100 TB of candidates this
-  * is a map-only scan.
+  * score as a pure column expression over the filtered candidates. The
+  * scoring itself adds no shuffle, but `products` enters the plan twice,
+  * so whatever it costs runs twice: over `Pipeline.processedProducts` that
+  * is two CSV scans, each with its keep-first dedup shuffle.
+  * `OrdersEtl.findSimilarProducts` avoids this with a pinned products
+  * frame and [[scoreRows]].
   */
 object Similarity {
 
@@ -32,6 +38,27 @@ object Similarity {
         + when(mfr === tMfr, 0.2).otherwise(0.0)
         + (lit(1.0) - abs(tPrice - price) / greatest(tPrice, price)) * 0.3,
       5)
+
+  /** [[scoreExpr]] over candidate rows already on the driver, against one
+    * target row; both have `schema`, the products' (product_id, price,
+    * goods_group, manufacturer). The rows enter as a local relation and the
+    * target's attributes as typed literals, so Catalyst folds the
+    * projection on the driver (`ConvertToLocalRelation`): no job runs, and
+    * the scores are bit-identical to [[findSimilar]]'s. A null score (a
+    * null price on either side) comes back as NaN, the reference's value.
+    */
+  def scoreRows(spark: SparkSession, schema: StructType, candidates: Seq[Row],
+                target: Row): Map[Long, Double] = {
+    def t(c: String): Column =
+      lit(target.get(schema.fieldIndex(c))).cast(schema(c).dataType)
+    spark.createDataFrame(candidates.asJava, schema)
+      .select(col("product_id"),
+        scoreExpr(col("price"), col("goods_group"), col("manufacturer"),
+          t("price"), t("goods_group"), t("manufacturer")))
+      .collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) Double.NaN else r.getDouble(1)))
+      .toMap
+  }
 
   /** Tier-3 formulation lives in [[graft.functions.SimilarityScore]]: a
     * native 6-ary codegen expression, bit-identical to [[scoreExpr]]
